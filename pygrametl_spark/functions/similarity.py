@@ -1236,7 +1236,6 @@ def pq_train(
     m: int = 8,
     k: int = 16,
     iters: int = 2,
-    start_books: "list[list[list[float]]] | None" = None,
 ) -> "list[list[list[float]]]":
     """Train PQ codebooks: ``m`` subspaces x ``k`` centroids each, by
     fixed-round Lloyd's over squared L2 per subspace (the per-subspace
@@ -1251,45 +1250,29 @@ def pq_train(
     rounded to 6 decimals per round, so retraining reproduces the same
     codebooks bit-for-bit; a centroid that loses all members keeps its
     previous value.
-
-    ``start_books`` resumes training from previously returned codebooks
-    instead of re-seeding: because each round depends only on the
-    incoming books, ``pq_train(iters=a+b)`` is EXACTLY
-    ``pq_train(pq_train(iters=a), iters=b via start_books)`` — a caller
-    training two budget variants of the same quantizer pays each corpus
-    round once (pinned by test_pq_train_start_books_resumes).
     """
-    if start_books is not None:
-        if len(start_books) != m or any(len(sub) != k for sub in start_books):
-            raise ValueError(
-                f"start_books shape {len(start_books)}x"
-                f"{len(start_books[0]) if start_books else 0} != m={m} x k={k}"
-            )
-        books = [[list(map(float, c)) for c in sub] for sub in start_books]
-        d = len(books[0][0])
-    else:
-        # seed components rounded through Spark's round (decimal HALF_UP,
-        # the same rule DuckDB's ROUND applies) — python round() is
-        # half-even and would diverge from the oracle on .5-boundary
-        # components. The vector dimension is read off the first seed row
-        # (one collect seeds AND sizes — the former separate first() probe
-        # was an extra driver job per training).
-        seed_rows = (
-            df.orderBy(F.col(id_col).asc())
-            .limit(k)
-            .select(F.expr(f"transform({vec_col}, x -> round(CAST(x AS DOUBLE), 6))").alias("_v"))
-            .collect()
-        )
-        if len(seed_rows) < k:
-            raise ValueError(f"need >= k={k} vectors to train, have {len(seed_rows)}")
-        dim = len(seed_rows[0]["_v"])
-        if dim % m:
-            raise ValueError(f"dim {dim} not divisible by m={m}")
-        d = dim // m
-        books = [
-            [[float(r["_v"][i * d + j]) for j in range(d)] for r in seed_rows]
-            for i in range(m)
-        ]
+    # seed components rounded through Spark's round (decimal HALF_UP,
+    # the same rule DuckDB's ROUND applies) — python round() is
+    # half-even and would diverge from the oracle on .5-boundary
+    # components. The vector dimension is read off the first seed row
+    # (one collect seeds AND sizes — the former separate first() probe
+    # was an extra driver job per training).
+    seed_rows = (
+        df.orderBy(F.col(id_col).asc())
+        .limit(k)
+        .select(F.expr(f"transform({vec_col}, x -> round(CAST(x AS DOUBLE), 6))").alias("_v"))
+        .collect()
+    )
+    if len(seed_rows) < k:
+        raise ValueError(f"need >= k={k} vectors to train, have {len(seed_rows)}")
+    dim = len(seed_rows[0]["_v"])
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    d = dim // m
+    books = [
+        [[float(r["_v"][i * d + j]) for j in range(d)] for r in seed_rows]
+        for i in range(m)
+    ]
     for _ in range(iters):
         coded = df.select(
             _pq_assign_codes(vec_col, books, m, d).alias("_codes"), F.col(vec_col)

@@ -45,7 +45,8 @@ from pygrametl_spark.sources.sources import (
 # them in THIS module made queries_extra/queries_more import back into
 # the registry assembler, a latent import cycle.
 from pygrametl_spark.queries_shared import (  # noqa: F401
-    _SCD2_DUCK_DIM, TS_FMT_DUCK, TS_FMT_SPARK, _fmt_ts,
+    _SCD2_DUCK_DIM, TS_FMT_DUCK, TS_FMT_SPARK, _fmt_ts, build_concurrently,
+    session_side_effect,
 )
 
 
@@ -801,6 +802,7 @@ GROUP BY n_name
 """
 
 
+@session_side_effect  # registers the catalog tables as temp views
 def q_sql_transforming(spark, sf_dir):
     """SQLTransformingSource: the engine's first-class SQL surface
     (ref datasources.py:451-606)."""
@@ -827,6 +829,7 @@ def _engine_sql_wh() -> str:
     return _ENGINE_SQL_WH
 
 
+@session_side_effect  # Engine.sql registers the warehouse as temp views
 def q_engine_sql(spark, sf_dir):
     """Engine.sql: ANSI SQL over the REGISTERED warehouse — every
     registered table becomes a queryable view reflecting its current
@@ -878,7 +881,7 @@ from pygrametl_spark.queries_extra import EXTRA_ORACLES, EXTRA_QUERIES  # noqa: 
 from pygrametl_spark.queries_merged import build_merged  # noqa: E402
 from pygrametl_spark.queries_more import MORE_ORACLES, MORE_QUERIES  # noqa: E402
 
-# Every individually-implemented query/oracle pair (74). These remain the
+# Every individually-implemented query/oracle pair (129). These remain the
 # unit of implementation and of local parity debugging; the driver-facing
 # registry below folds related ones into tag-union queries (see
 # queries_merged.py) so the whole surface fits the driver's ~50-query
@@ -957,10 +960,12 @@ ALL_ORACLES = {
     **MORE_ORACLES,
 }
 
-# Shared-intermediate merged builders (optimization r9): merges whose
-# parts duplicate heavy subtrees compute them once; same tags, same
-# rows, same oracle (queries_merged._shared_union_query).
-from pygrametl_spark.queries_data import shared_sampling_suite  # noqa: E402
+# Custom merged builders: merges whose parts duplicate heavy subtrees
+# compute them once; same tags, same rows, same oracle as the default
+# per-part construction (queries_merged module docstring).
+from pygrametl_spark.queries_data import (  # noqa: E402
+    merged_dedup_ngram_jaccard, shared_sampling_suite,
+)
 from pygrametl_spark.queries_more import shared_scd2_type1_overrides  # noqa: E402
 
 
@@ -970,11 +975,9 @@ def shared_scd2_build_close(spark, sf_dir):
     generically, each replayed the events window chain + dense-key
     assignment. Build it once, pin it, and construct the datechange
     part (its own version-on-datechange base) concurrently."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from pygrametl_spark.queries_extra import q_scd2_datechange
 
-    def _build_close(spark, sf_dir):
+    def _build_close():
         events = load_catalog(spark, sf_dir).events
         hist = scd2_from_history(
             events, ["user_id"], ["event_type"], "ts", key="id", tiebreak=["event_id"]
@@ -984,32 +987,20 @@ def shared_scd2_build_close(spark, sf_dir):
             q_scd_closecurrent(spark, sf_dir, dim_df=hist),
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_bc = pool.submit(_build_close, spark, sf_dir)
-        f_dc = pool.submit(q_scd2_datechange, spark, sf_dir)
-        build, close = f_bc.result()
-        datechange = f_dc.result()
+    (build, close), datechange = build_concurrently(
+        spark, [_build_close, lambda: q_scd2_datechange(spark, sf_dir)]
+    )
     return [("build", build), ("close", close), ("datechange", datechange)]
 
 
-_SHARED_BUILDERS = {
+_BUILDERS = {
     "scd2_type1_overrides": shared_scd2_type1_overrides,
     "sampling_suite": shared_sampling_suite,
     "scd2_build_close": shared_scd2_build_close,
-}
-
-# Fully-fused merges (optimization r9): parts that are in-row score
-# variants over ONE pair relation collapse into a single chain emitting
-# every part's rows (queries_merged.build_merged full_builders).
-from pygrametl_spark.queries_data import merged_dedup_ngram_jaccard  # noqa: E402
-
-_FULL_BUILDERS = {
     "dedup_ngram_jaccard": merged_dedup_ngram_jaccard,
 }
 
-_MERGED_Q, _MERGED_O = build_merged(
-    ALL_QUERIES, ALL_ORACLES, _SHARED_BUILDERS, _FULL_BUILDERS
-)
+_MERGED_Q, _MERGED_O = build_merged(ALL_QUERIES, ALL_ORACLES, _BUILDERS)
 
 # Driver-facing registry: <=50 entries, highest-value first, every
 # SURVEY §2 operator gated by exactly one entry (directly or as a

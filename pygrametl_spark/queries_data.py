@@ -10,6 +10,8 @@ hyperplanes, marker lists) so both engines replay identical math.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -19,6 +21,7 @@ from pygrametl_spark.functions import multimodal as mm
 from pygrametl_spark.functions import similarity as sim
 from pygrametl_spark.functions import text as tx
 from pygrametl_spark.functions import urls as ur
+from pygrametl_spark.queries_shared import build_concurrently, session_side_effect
 from pygrametl_spark.streaming.events import stream_windowed_event_counts
 
 # ---------------------------------------------------------------------------
@@ -461,6 +464,7 @@ HAVING text NOT IN (SELECT text FROM documents WHERE doc_id % 10 >= 3)
 """
 
 
+@session_side_effect
 def q_dedup_minhash_stream(spark, sf_dir):
     """Streaming NEAR-dup rejection (streaming/corpus.py
     stream_dedup_minhash): per-batch band-key join against the
@@ -476,6 +480,7 @@ def q_dedup_minhash_stream(spark, sf_dir):
     )
 
 
+@session_side_effect
 def q_dedup_streaming(spark, sf_dir):
     """Incremental exact dedup over a live document stream: per-batch
     fingerprint + anti-join against the accepted store (foreachBatch,
@@ -492,6 +497,7 @@ def q_dedup_streaming(spark, sf_dir):
 
 
 # (oracle assigned after _URL_ORACLE_CTE below)
+@session_side_effect
 def q_url_dedup_stream(spark, sf_dir):
     """Streaming canonical-URL dedup (streaming/corpus.py
     stream_dedup_url): per-batch url_normalize + anti-join against the
@@ -517,6 +523,7 @@ GROUP BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
 """
 
 
+@session_side_effect
 def q_events_dedup_watermark(spark, sf_dir):
     """State-bounded streaming dedup via Spark's native
     ``dropDuplicatesWithinWatermark`` (streaming/events.py): state is
@@ -1951,6 +1958,7 @@ SELECT doc_id, {cols} FROM h
 """
 
 
+@session_side_effect
 def q_events_stream_windows(spark, sf_dir):
     return _memo_stream_gate(
         spark, "evwindows", sf_dir, "default",
@@ -1965,6 +1973,7 @@ FROM events GROUP BY 1, 2
 """
 
 
+@session_side_effect
 def q_events_stream_enriched(spark, sf_dir):
     from pygrametl_spark.streaming.events import stream_enriched_event_counts
 
@@ -1982,6 +1991,7 @@ GROUP BY 1, 2
 """
 
 
+@session_side_effect
 def q_events_stream_ssjoin(spark, sf_dir):
     from pygrametl_spark.streaming.events import stream_click_to_purchase_join
 
@@ -2078,8 +2088,6 @@ def shared_sampling_suite(spark, sf_dir):
     from pygrametl_spark.functions.dedup import cluster_survivors, neardup_clusters
     from pygrametl_spark.functions.sampling import cluster_split
 
-    from concurrent.futures import ThreadPoolExecutor
-
     docs_spread = spread(load_catalog(spark, sf_dir).documents)
     clusters = neardup_clusters(docs_spread, threshold=0.5)
 
@@ -2106,14 +2114,13 @@ def shared_sampling_suite(spark, sf_dir):
         ("quantile", q_quantile_buckets),
     ]
     # remaining construction actions (quantile's plan-choosing count)
-    # overlap on a small pool (guide §2.6)
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        dfs = list(pool.map(lambda tf: tf[1](spark, sf_dir), builders))
+    # overlap on the part pool
+    dfs = build_concurrently(spark, [partial(fn, spark, sf_dir) for _, fn in builders])
     return [(tag, df) for (tag, _), df in zip(builders, dfs)]
 
 
-def merged_dedup_ngram_jaccard(spark, sf_dir, schema):
-    """Fully-fused merged query for the dedup_ngram_jaccard tag-union.
+def merged_dedup_ngram_jaccard(spark, sf_dir):
+    """Fused builder for the dedup_ngram_jaccard tag-union.
 
     The jaccard and containment parts differ ONLY in the in-row score
     expression and threshold over the SAME ``(id_1, id_2, n1, n2,
@@ -2131,9 +2138,10 @@ def merged_dedup_ngram_jaccard(spark, sf_dir, schema):
     ``ngram_jaccard_pairs`` (round-then-filter, long/long division), so
     every surviving row is bit-identical to the standalone parts; the
     UNION ALL oracle is unchanged and verifies that equivalence. The
-    exactsubstr part keeps its own independent chain."""
+    fused frame carries its rows' ``part`` column itself, so it is
+    yielded under both its tags; the exactsubstr part keeps its own
+    independent chain."""
     from pygrametl_spark.functions.dedup import ngram_pair_intersections
-    from pygrametl_spark.queries_merged import _pad_one
 
     docs = load_catalog(spark, sf_dir).documents
     pairs = ngram_pair_intersections(docs, n=3)
@@ -2166,16 +2174,10 @@ def merged_dedup_ngram_jaccard(spark, sf_dir, schema):
         .filter("_e.jaccard IS NOT NULL OR _e.containment IS NOT NULL")
         .select("_e.part", "id_1", "id_2", "_e.jaccard", "_e.containment")
     )
-    have = {"jaccard", "containment", "id_1", "id_2"}
-    padded = fused.selectExpr(
-        "part",
-        *[
-            f"`{c}`" if c in have else f"CAST(NULL AS {t}) AS `{c}`"
-            for c, t in schema
-        ],
-    )
-    exact = _pad_one(q_exact_substring(spark, sf_dir), "exactsubstr", schema)
-    return padded.unionByName(exact)
+    return [
+        (("jaccard", "containment"), fused),
+        ("exactsubstr", q_exact_substring(spark, sf_dir)),
+    ]
 
 
 DATA_QUERIES = {

@@ -1,666 +1,249 @@
 """Tag-union merged queries for the driver's correctness gate.
 
-The driver evaluates at most ~50 ``queries()`` entries per round
-(CORRECTNESS_r01 covered exactly the first 50 of 74 registered names),
-so a 74-entry registry leaves operators formally unproven. To give every
-operator a driver-verified oracle row, closely-related operators are
-folded into single tag-union queries:
+The driver evaluates at most ~50 ``queries()`` entries per round, while
+the engine implements 129 query/oracle units. To give every operator a
+driver-verified oracle row, closely related units are folded into 25
+tag-union queries (104 parts); the other 25 registry entries stand
+alone.
 
-- each part keeps its EXACT original plan and result (the part query
-  function is called unchanged),
-- a ``part`` literal column tags provenance,
-- columns a part doesn't produce are padded with typed NULLs,
-- the DuckDB oracle is the same UNION ALL over the parts' oracles.
+One mechanism builds every merge:
+
+- **Builder contract.** A merge is built by ``fn(spark, sf_dir)``
+  returning ``[(tag, DataFrame)]`` in the merge's declared tag order.
+  The default builder calls each part query unchanged. A custom builder
+  (``builders`` in :func:`build_merged`) may share intermediates between
+  parts, but must yield the same tags with rows identical to the
+  standalone parts. A fused frame whose rows already carry their own
+  ``part`` column is listed once under the tuple of the tags it covers.
+  The declared tags are checked on every call, for every builder.
+- **By-name padding.** Each frame is tagged with ``'<tag>' AS part`` and
+  the frames are unioned with ``unionByName(allowMissingColumns=True)``;
+  the DuckDB oracle is ``SELECT '<tag>' AS part, * FROM (<part oracle>)``
+  joined with ``UNION ALL BY NAME``. Both engines fill a column a part
+  lacks with NULLs of the type the other parts give it and order
+  columns by first appearance, so no schema is kept by hand.
+- **Side-effect rule.** The default builder constructs a merge's parts
+  concurrently (``queries_shared.build_concurrently``, pool width from
+  the effective core count) unless one of them is marked
+  ``@session_side_effect`` where it is defined; then all parts build in
+  order.
 
 Rows from different parts can never collide (the tag differs), so
 value-hash equality on the merged result still verifies each part
-independently — the merge loses no checking power, only row count in the
-registry.
+independently — the merge loses no checking power, only row count in
+the registry. Custom builders are checked against the SAME oracle as
+the default construction.
 
-This module only provides the factory; the merge table lives here but is
+This module only provides the mechanism and the merge table; it is
 instantiated from :mod:`pygrametl_spark.queries` (which owns the full
 per-part dicts) to avoid circular imports.
 """
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import partial, reduce
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pygrametl_spark.queries_shared import build_concurrently
 
 __all__ = ["build_merged", "MERGES"]
 
-# Spark simple-string type -> DuckDB type for NULL padding
-_DUCK = {
-    "bigint": "BIGINT",
-    "int": "INTEGER",
-    "string": "VARCHAR",
-    "double": "DOUBLE",
-    "boolean": "BOOLEAN",
-}
-
-# Output columns of every part query (from its committed schema); used to
-# decide which columns each UNION ALL branch must NULL-pad.
-PART_COLS: dict[str, list[str]] = {
-    "project_rename": ["name", "segment"],
-    "filtering_source": ["o_orderkey", "o_custkey", "totalprice"],
-    "mapping_source": ["c_custkey", "name", "acctbal_cents"],
-    "hash_joining_source": ["l_orderkey", "l_linenumber", "part_name", "brand", "price"],
-    "merge_joining_source": ["o_orderkey", "customer", "totalprice"],
-    "csv_source_roundtrip": ["c_custkey", "c_name", "c_mktsegment"],
-    "jsonl_source": ["doc_id", "text", "lang", "source"],
-    "pandas_source": ["r_regionkey", "r_name"],
-    "transforming_source": ["s_suppkey", "name", "band"],
-    "dynamic_foreach_source": ["n_nationkey", "n_name", "n_regionkey"],
-    "round_robin_source": ["s_suppkey", "s_name"],
-    "salted_join": ["l_orderkey", "l_linenumber", "pk", "brand", "l_quantity"],
-    "union_source": ["name", "acctbal", "segment"],
-    "valuemapping_step": ["o_orderkey", "status_name"],
-    "conditional_step": ["o_orderkey", "branch"],
-    "steps_chain": ["priority", "n", "total"],
-    "dim_getbykey": ["id", "name"],
-    "scd_lookupasof": ["event_id", "id"],
-    "asof_generic": ["click_id", "purchase_id"],
-    "range_join_events": ["click_id", "purchase_id"],
-    "dim_getbyvals": ["p_partkey", "p_name", "p_size"],
-    "snowflake_lookuprow": ["c_custkey", "name", "nation", "region"],
-    "snowflake_ensure": ["c_custkey", "c_name", "n_nationkey", "c_acctbal"],
-    "sql_transforming": ["n_name", "revenue"],
-    "engine_sql": ["n_name", "n_suppliers", "total_acctbal"],
-    "scd2_type1_all_versions": [
-        "id", "user_id", "event_type", "version", "fromdate", "todate", "latest_value",
+# merged name -> parts [(tag, part query name)]
+MERGES: dict[str, list[tuple[str, str]]] = {
+    "project_map_filter": [
+        ("project", "project_rename"),
+        ("filter", "filtering_source"),
+        ("map", "mapping_source"),
     ],
-    "scd2_type1_latest_only": [
-        "id", "user_id", "event_type", "version", "fromdate", "todate", "latest_value",
+    "joining_sources": [
+        ("hash", "hash_joining_source"),
+        ("merge", "merge_joining_source"),
+        ("salted", "salted_join"),
     ],
-    "scd2_build": ["id", "user_id", "event_type", "version", "fromdate", "todate"],
-    "scd2_datechange": ["id", "user_id", "event_type", "version", "fromdate", "todate"],
-    "scd_closecurrent": ["id", "user_id", "version", "todate"],
-    "fact_ensure": ["o_orderkey", "o_custkey", "o_totalprice"],
-    "fact_lookup": ["o_orderkey", "o_custkey", "o_totalprice"],
-    "bulk_fact_roundtrip": [
-        "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
-        "l_extendedprice",
+    "sources_roundtrip": [
+        ("csv", "csv_source_roundtrip"),
+        ("jsonl", "jsonl_source"),
+        ("pandas", "pandas_source"),
+        ("transforming", "transforming_source"),
+        ("foreach", "dynamic_foreach_source"),
+        ("roundrobin", "round_robin_source"),
+        ("union", "union_source"),
     ],
-    "rollup_agg": ["priority", "status", "total", "n"],
-    "topk": ["o_orderkey", "o_totalprice"],
-    "topk_pergroup": ["o_orderpriority", "rk", "o_orderkey", "o_totalprice"],
-    "cube_agg": ["priority", "status", "total"],
-    "countdistinct_agg": ["o_orderpriority", "n", "ncust", "minprice", "maxprice", "avgprice"],
-    "custom_udaf": ["o_orderpriority", "median_price"],
-    "text_quality": ["doc_id", "n_tokens", "stopword_ratio", "avg_token_len", "quality_score"],
-    "repetition_stats": [
-        "doc_id", "top2_frac", "top3_frac", "top4_frac", "dup5_frac", "repetitive",
+    "steps_suite": [
+        ("valuemap", "valuemapping_step"),
+        ("conditional", "conditional_step"),
+        ("chain", "steps_chain"),
     ],
-    "lang_id": ["doc_id", "lang_pred"],
-    "doc_fingerprint": ["doc_id", "fp"],
-    "tfidf_topk": ["doc_id", "rank", "term", "tfidf"],
-    "winnow_fp": ["doc_id", "wfp"],
-    "lm_score": ["doc_id", "n_bigrams", "lm_score"],
-    "multimodal_decode": ["doc_id", "byte_len", "width", "height", "format"],
-    "multimodal_realdecode": ["doc_id", "byte_len", "width", "height", "format"],
-    "multimodal_resize": ["doc_id", "out_w", "out_h", "resized_md5"],
-    "multimodal_frames": ["doc_id", "frame_idx", "ts_ms", "frame_md5"],
-    "multimodal_features": ["doc_id", "f0", "f1", "f2", "f3", "f4", "f5", "f6", "f7"],
-    "ann_ivf_index": ["query_id", "rank", "neighbor_id", "cosine"],
-    "ann_ivfpq_compacted": ["query_id", "rank", "neighbor_id", "score"],
-    "ann_lsh_buckets": ["vec_id", "bucket"],
-    "ann_lsh_neardup": ["id_1", "id_2", "cosine"],
-    "ann_semdedup": ["vec_id", "cluster", "keep"],
-    "ann_kmeans": ["vec_id", "cluster"],
-    "ann_pq_codes": ["vec_id", "sub", "code"],
-    "ann_sq8_topk": ["query_id", "rank", "neighbor_id", "qcosine"],
-    "ann_pq_rerank": ["query_id", "rank", "neighbor_id", "cosine"],
-    "ann_lsh_mp_topk": ["query_id", "rank", "neighbor_id", "cosine"],
-    "scalar_helpers": ["p_partkey", "name", "size", "even", "dbstr", "sqlstr"],
-    "datespan": ["dateid", "date", "monthname", "weekday", "year", "month", "day", "quarter"],
-    "dataset_split": ["doc_id", "split"],
-    "cluster_split": ["doc_id", "cluster_id", "split"],
-    "stratified_sample": ["doc_id", "source"],
-    "pack_tokens": ["doc_id", "source", "n_tokens", "pack_id"],
-    "pii_scan": ["doc_id", "n_emails", "n_urls", "n_ips", "has_pii"],
-    "line_clean": ["doc_id", "n_lines", "n_dropped", "clean_text"],
-    "hashed_classifier": ["doc_id", "n_feats", "score_units", "label"],
-    "quantile_buckets": ["doc_id", "lang", "bucket"],
-    "dsir_importance": ["doc_id", "n_feats", "dsir_units", "dsir_score"],
-    "bloom_decontam": ["doc_id", "n_flagged", "contaminated"],
-    "gopher_rules": [
-        "doc_id", "n_words", "mean_word_len", "symbol_ratio",
-        "alpha_word_ratio", "n_required_stops", "gopher_pass",
+    "dim_getby": [("bykey", "dim_getbykey"), ("byvals", "dim_getbyvals")],
+    "snowflake_lookup_ensure": [
+        ("lookup", "snowflake_lookuprow"),
+        ("ensure", "snowflake_ensure"),
     ],
-    "normalize_text": ["doc_id", "norm_text", "n_clean_chars"],
-    "line_dedup": ["doc_id", "n_lines", "n_dropped", "dedup_text"],
-    "url_normalize": ["doc_id", "norm_url", "reg_domain"],
-    "url_dedup": ["doc_id", "n_dups", "norm_url"],
-    "host_blocklist": ["doc_id", "reg_domain"],
-    "host_shares": ["reg_domain", "n_docs", "share"],
-    "domain_cap": ["doc_id", "source", "rk"],
-    "shuffle_shards": ["doc_id", "shard", "pos"],
-    "cluster_survivors": ["doc_id", "cluster_id", "rk"],
-    "dedup_exact": ["doc_id"],
-    "dedup_incremental": ["doc_id"],
-    "dedup_ngram_jaccard": ["id_1", "id_2", "jaccard"],
-    "ngram_containment": ["id_1", "id_2", "containment"],
-    "exact_substring": [
-        "doc_id", "n_tokens", "n_dup_spans", "n_removed", "dup_bps", "kept_fp",
-    ],
-    "token_count": ["source", "n_docs", "total_tokens", "avg_tokens"],
-    "bpe_token_count": ["source", "n_docs", "total_tokens", "avg_tokens"],
-    "corpus_report": [
-        "source", "n_docs", "total_tokens", "p50_tokens", "p90_tokens",
-        "avg_chars", "n_langs",
-    ],
-    "mixture_sample": ["doc_id", "source", "n_tokens"],
-    "doc_chunks": ["doc_id", "chunk_id", "n_chunk_tokens", "chunk_fp"],
-    "chunk_dedup": ["doc_id", "chunk_id", "chunk_fp", "n_copies"],
-    "vocab_coverage": ["source", "total_tokens", "n_oov", "oov_rate"],
-    "dedup_streaming": ["doc_id", "fp"],
-    "url_dedup_stream": ["doc_id", "norm_url"],
-    "dedup_minhash_stream": ["doc_id"],
-    "events_dedup_watermark": ["user_id", "event_type"],
-    "char_entropy": ["doc_id", "char_entropy"],
-    "decontaminate": ["doc_id", "contaminated"],
-    "events_stream_windows": ["window_start", "event_type", "n_events", "sum_value"],
-    "events_stream_enriched": ["window_start", "n_name", "n_events", "sum_value"],
-    "events_stream_ssjoin": ["click_id", "buy_id"],
-}
-
-# merged name -> (schema [(col, spark_type)], parts [(tag, part_query_name)])
-MERGES: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str]]]] = {
-    "project_map_filter": (
-        [
-            ("name", "string"), ("segment", "string"), ("o_orderkey", "bigint"),
-            ("o_custkey", "bigint"), ("totalprice", "double"),
-            ("c_custkey", "bigint"), ("acctbal_cents", "bigint"),
-        ],
-        [
-            ("project", "project_rename"),
-            ("filter", "filtering_source"),
-            ("map", "mapping_source"),
-        ],
-    ),
-    "joining_sources": (
-        [
-            ("l_orderkey", "bigint"), ("l_linenumber", "int"),
-            ("part_name", "string"), ("brand", "string"), ("price", "double"),
-            ("o_orderkey", "bigint"), ("customer", "string"), ("totalprice", "double"),
-            ("pk", "bigint"), ("l_quantity", "double"),
-        ],
-        [
-            ("hash", "hash_joining_source"),
-            ("merge", "merge_joining_source"),
-            ("salted", "salted_join"),
-        ],
-    ),
-    "sources_roundtrip": (
-        [
-            ("c_custkey", "bigint"), ("c_name", "string"), ("c_mktsegment", "string"),
-            ("r_regionkey", "int"), ("r_name", "string"),
-            ("s_suppkey", "bigint"), ("name", "string"), ("band", "string"),
-            ("n_nationkey", "bigint"), ("n_name", "string"), ("n_regionkey", "bigint"),
-            ("s_name", "string"), ("acctbal", "double"), ("segment", "string"),
-            ("doc_id", "bigint"), ("text", "string"), ("lang", "string"),
-            ("source", "string"),
-        ],
-        [
-            ("csv", "csv_source_roundtrip"),
-            ("jsonl", "jsonl_source"),
-            ("pandas", "pandas_source"),
-            ("transforming", "transforming_source"),
-            ("foreach", "dynamic_foreach_source"),
-            ("roundrobin", "round_robin_source"),
-            ("union", "union_source"),
-        ],
-    ),
-    "steps_suite": (
-        [
-            ("o_orderkey", "bigint"), ("status_name", "string"), ("branch", "string"),
-            ("priority", "string"), ("n", "bigint"), ("total", "double"),
-        ],
-        [
-            ("valuemap", "valuemapping_step"),
-            ("conditional", "conditional_step"),
-            ("chain", "steps_chain"),
-        ],
-    ),
-    "dim_getby": (
-        [
-            ("id", "bigint"), ("name", "string"),
-            ("p_partkey", "bigint"), ("p_name", "string"), ("p_size", "int"),
-        ],
-        [("bykey", "dim_getbykey"), ("byvals", "dim_getbyvals")],
-    ),
-    "snowflake_lookup_ensure": (
-        [
-            ("c_custkey", "bigint"), ("name", "string"), ("nation", "string"),
-            ("region", "string"), ("c_name", "string"), ("n_nationkey", "bigint"),
-            ("c_acctbal", "double"),
-        ],
-        [("lookup", "snowflake_lookuprow"), ("ensure", "snowflake_ensure")],
-    ),
     # SQL surface: the staged-source transform (TPC-H Q5 through
     # SQLTransformingSource) + Engine.sql over registered warehouse tables
-    "sql_transforming": (
-        [
-            ("n_name", "string"), ("revenue", "double"),
-            ("n_suppliers", "bigint"), ("total_acctbal", "double"),
-        ],
-        [("q5", "sql_transforming"), ("enginesql", "engine_sql")],
-    ),
-    "scd2_type1_overrides": (
-        [
-            ("id", "bigint"), ("user_id", "bigint"), ("event_type", "string"),
-            ("version", "bigint"), ("fromdate", "string"), ("todate", "string"),
-            ("latest_value", "double"),
-        ],
-        [
-            ("allversions", "scd2_type1_all_versions"),
-            ("latestonly", "scd2_type1_latest_only"),
-        ],
-    ),
-    "scd2_build_close": (
-        [
-            ("id", "bigint"), ("user_id", "bigint"), ("event_type", "string"),
-            ("version", "bigint"), ("fromdate", "string"), ("todate", "string"),
-        ],
-        [
-            ("build", "scd2_build"),
-            ("close", "scd_closecurrent"),
-            ("datechange", "scd2_datechange"),
-        ],
-    ),
-    "fact_suite": (
-        [
-            ("o_orderkey", "bigint"), ("o_custkey", "bigint"), ("o_totalprice", "double"),
-            ("l_orderkey", "bigint"), ("l_partkey", "bigint"), ("l_suppkey", "bigint"),
-            ("l_linenumber", "int"), ("l_quantity", "double"), ("l_extendedprice", "double"),
-        ],
-        [
-            ("ensure", "fact_ensure"),
-            ("lookup", "fact_lookup"),
-            ("bulk", "bulk_fact_roundtrip"),
-        ],
-    ),
-    "rollup_cube_agg": (
-        [
-            ("priority", "string"), ("status", "string"),
-            ("total", "double"), ("n", "bigint"),
-        ],
-        [("rollup", "rollup_agg"), ("cube", "cube_agg")],
-    ),
-    "advanced_aggs": (
-        [
-            ("o_orderpriority", "string"), ("n", "bigint"), ("ncust", "bigint"),
-            ("minprice", "double"), ("maxprice", "double"), ("avgprice", "double"),
-            ("median_price", "double"),
-        ],
-        [("countdistinct", "countdistinct_agg"), ("udaf", "custom_udaf")],
-    ),
-    "text_analysis": (
-        [
-            ("doc_id", "bigint"), ("n_tokens", "bigint"), ("stopword_ratio", "double"),
-            ("avg_token_len", "double"), ("quality_score", "double"),
-            ("lang_pred", "string"), ("fp", "string"),
-            ("top2_frac", "double"), ("top3_frac", "double"), ("top4_frac", "double"),
-            ("dup5_frac", "double"), ("repetitive", "boolean"),
-            ("char_entropy", "double"),
-            ("rank", "bigint"), ("term", "string"), ("tfidf", "double"),
-            ("wfp", "bigint"), ("n_bigrams", "bigint"), ("lm_score", "double"),
-            ("n_words", "bigint"), ("mean_word_len", "double"),
-            ("symbol_ratio", "double"), ("alpha_word_ratio", "double"),
-            ("n_required_stops", "bigint"), ("gopher_pass", "boolean"),
-            ("norm_text", "string"), ("n_clean_chars", "bigint"),
-            ("n_lines", "bigint"), ("n_dropped", "bigint"),
-            ("dedup_text", "string"),
-        ],
-        [
-            ("quality", "text_quality"),
-            ("lang", "lang_id"),
-            ("fingerprint", "doc_fingerprint"),
-            ("repetition", "repetition_stats"),
-            ("entropy", "char_entropy"),
-            ("tfidf", "tfidf_topk"),
-            ("winnow", "winnow_fp"),
-            ("lmscore", "lm_score"),
-            ("gopher", "gopher_rules"),
-            ("textnorm", "normalize_text"),
-            ("linededup", "line_dedup"),
-        ],
-    ),
-    "multimodal_pipeline": (
-        [
-            ("doc_id", "bigint"), ("byte_len", "bigint"), ("width", "bigint"),
-            ("height", "bigint"), ("format", "string"), ("out_w", "bigint"),
-            ("out_h", "bigint"), ("resized_md5", "string"), ("frame_idx", "bigint"),
-            ("ts_ms", "bigint"), ("frame_md5", "string"),
-            ("f0", "double"), ("f1", "double"), ("f2", "double"), ("f3", "double"),
-            ("f4", "double"), ("f5", "double"), ("f6", "double"), ("f7", "double"),
-        ],
-        [
-            ("decode", "multimodal_decode"),
-            ("realdecode", "multimodal_realdecode"),
-            ("resize", "multimodal_resize"),
-            ("frames", "multimodal_frames"),
-            ("features", "multimodal_features"),
-        ],
-    ),
-    "dedup_exact": (
-        [
-            ("doc_id", "bigint"), ("fp", "string"),
-            ("user_id", "bigint"), ("event_type", "string"),
-            ("norm_url", "string"),
-        ],
-        [
-            ("batch", "dedup_exact"),
-            ("incremental", "dedup_incremental"),
-            ("stream", "dedup_streaming"),
-            ("urlstream", "url_dedup_stream"),
-            ("minhashstream", "dedup_minhash_stream"),
-            ("watermark", "events_dedup_watermark"),
-        ],
-    ),
-    "token_count": (
-        [
-            ("source", "string"), ("n_docs", "bigint"), ("total_tokens", "bigint"),
-            ("avg_tokens", "double"), ("p50_tokens", "double"),
-            ("p90_tokens", "double"), ("avg_chars", "double"), ("n_langs", "bigint"),
-            ("doc_id", "bigint"), ("chunk_id", "bigint"),
-            ("n_chunk_tokens", "bigint"), ("chunk_fp", "string"),
-            ("n_copies", "bigint"), ("n_oov", "bigint"), ("oov_rate", "double"),
-        ],
-        [
-            ("counts", "token_count"),
-            ("bpe", "bpe_token_count"),
-            ("report", "corpus_report"),
-            ("chunks", "doc_chunks"),
-            ("chunkdedup", "chunk_dedup"),
-            ("vocab", "vocab_coverage"),
-        ],
-    ),
-    "ann_lsh_neardup": (
-        [
-            ("vec_id", "bigint"), ("bucket", "int"), ("cluster", "int"),
-            ("id_1", "bigint"), ("id_2", "bigint"), ("cosine", "double"),
-            ("query_id", "bigint"), ("rank", "bigint"),
-            ("neighbor_id", "bigint"), ("qcosine", "double"),
-            ("sub", "bigint"), ("code", "bigint"), ("keep", "boolean"),
-        ],
-        [
-            ("buckets", "ann_lsh_buckets"),
-            ("neardup", "ann_lsh_neardup"),
-            ("kmeans", "ann_kmeans"),
-            ("sq8", "ann_sq8_topk"),
-            ("pq", "ann_pq_codes"),
-            ("rerank", "ann_pq_rerank"),
-            ("multiprobe", "ann_lsh_mp_topk"),
-            ("semdedup", "ann_semdedup"),
-        ],
-    ),
-    "topk": (
-        [
-            ("o_orderkey", "bigint"), ("o_totalprice", "double"),
-            ("o_orderpriority", "string"), ("rk", "bigint"),
-        ],
-        [("global", "topk"), ("pergroup", "topk_pergroup")],
-    ),
+    "sql_transforming": [("q5", "sql_transforming"), ("enginesql", "engine_sql")],
+    "scd2_type1_overrides": [
+        ("allversions", "scd2_type1_all_versions"),
+        ("latestonly", "scd2_type1_latest_only"),
+    ],
+    "scd2_build_close": [
+        ("build", "scd2_build"),
+        ("close", "scd_closecurrent"),
+        ("datechange", "scd2_datechange"),
+    ],
+    "fact_suite": [
+        ("ensure", "fact_ensure"),
+        ("lookup", "fact_lookup"),
+        ("bulk", "bulk_fact_roundtrip"),
+    ],
+    "rollup_cube_agg": [("rollup", "rollup_agg"), ("cube", "cube_agg")],
+    "advanced_aggs": [("countdistinct", "countdistinct_agg"), ("udaf", "custom_udaf")],
+    "text_analysis": [
+        ("quality", "text_quality"),
+        ("lang", "lang_id"),
+        ("fingerprint", "doc_fingerprint"),
+        ("repetition", "repetition_stats"),
+        ("entropy", "char_entropy"),
+        ("tfidf", "tfidf_topk"),
+        ("winnow", "winnow_fp"),
+        ("lmscore", "lm_score"),
+        ("gopher", "gopher_rules"),
+        ("textnorm", "normalize_text"),
+        ("linededup", "line_dedup"),
+    ],
+    "multimodal_pipeline": [
+        ("decode", "multimodal_decode"),
+        ("realdecode", "multimodal_realdecode"),
+        ("resize", "multimodal_resize"),
+        ("frames", "multimodal_frames"),
+        ("features", "multimodal_features"),
+    ],
+    "dedup_exact": [
+        ("batch", "dedup_exact"),
+        ("incremental", "dedup_incremental"),
+        ("stream", "dedup_streaming"),
+        ("urlstream", "url_dedup_stream"),
+        ("minhashstream", "dedup_minhash_stream"),
+        ("watermark", "events_dedup_watermark"),
+    ],
+    "token_count": [
+        ("counts", "token_count"),
+        ("bpe", "bpe_token_count"),
+        ("report", "corpus_report"),
+        ("chunks", "doc_chunks"),
+        ("chunkdedup", "chunk_dedup"),
+        ("vocab", "vocab_coverage"),
+    ],
+    "ann_lsh_neardup": [
+        ("buckets", "ann_lsh_buckets"),
+        ("neardup", "ann_lsh_neardup"),
+        ("kmeans", "ann_kmeans"),
+        ("sq8", "ann_sq8_topk"),
+        ("pq", "ann_pq_codes"),
+        ("rerank", "ann_pq_rerank"),
+        ("multiprobe", "ann_lsh_mp_topk"),
+        ("semdedup", "ann_semdedup"),
+    ],
+    "topk": [("global", "topk"), ("pergroup", "topk_pergroup")],
     # same registered name as the individual persisted-IVF query it
     # replaces: adds the streamed-then-COMPACTED IVF-PQ lifecycle part
-    # (r6, VERDICT r5 next-round #1) without spending a registry slot
-    "ann_ivf_index": (
-        [
-            ("query_id", "bigint"), ("rank", "bigint"),
-            ("neighbor_id", "bigint"), ("score", "double"),
-            ("cosine", "double"),
-        ],
-        [
-            ("index", "ann_ivf_index"),
-            ("pqcompact", "ann_ivfpq_compacted"),
-        ],
-    ),
-    "helpers_suite": (
-        [
-            ("p_partkey", "bigint"), ("name", "string"), ("size", "bigint"),
-            ("even", "boolean"), ("dbstr", "string"), ("sqlstr", "string"),
-            ("dateid", "int"), ("date", "string"), ("monthname", "string"),
-            ("weekday", "string"), ("year", "int"), ("month", "int"), ("day", "int"),
-            ("quarter", "int"),
-        ],
-        [("scalar", "scalar_helpers"), ("datespan", "datespan")],
-    ),
+    # without spending a registry slot
+    "ann_ivf_index": [("index", "ann_ivf_index"), ("pqcompact", "ann_ivfpq_compacted")],
+    "helpers_suite": [("scalar", "scalar_helpers"), ("datespan", "datespan")],
     # same registered name as the individual scd as-of query it replaces:
     # adds the generic asof_join part without spending a registry slot
-    "scd_lookupasof": (
-        [
-            ("event_id", "bigint"), ("id", "bigint"),
-            ("click_id", "bigint"), ("purchase_id", "bigint"),
-        ],
-        [
-            ("scd", "scd_lookupasof"),
-            ("generic", "asof_generic"),
-            ("range", "range_join_events"),
-        ],
-    ),
+    "scd_lookupasof": [
+        ("scd", "scd_lookupasof"),
+        ("generic", "asof_generic"),
+        ("range", "range_join_events"),
+    ],
     # same registered name as the individual jaccard query it replaces:
     # the merge adds the containment part without spending a registry slot
-    "dedup_ngram_jaccard": (
-        [
-            ("id_1", "bigint"), ("id_2", "bigint"),
-            ("jaccard", "double"), ("containment", "double"),
-            ("doc_id", "bigint"), ("n_tokens", "bigint"),
-            ("n_dup_spans", "bigint"), ("n_removed", "bigint"),
-            ("dup_bps", "bigint"), ("kept_fp", "string"),
-        ],
-        [
-            ("jaccard", "dedup_ngram_jaccard"),
-            ("containment", "ngram_containment"),
-            ("exactsubstr", "exact_substring"),
-        ],
-    ),
-    "curation_guard": (
-        [
-            ("doc_id", "bigint"), ("n_emails", "bigint"), ("n_urls", "bigint"),
-            ("n_ips", "bigint"), ("has_pii", "boolean"),
-            ("contaminated", "boolean"),
-            ("n_lines", "bigint"), ("n_dropped", "bigint"),
-            ("clean_text", "string"),
-            ("n_feats", "bigint"), ("score_units", "bigint"),
-            ("label", "boolean"), ("n_flagged", "bigint"),
-            ("norm_url", "string"), ("reg_domain", "string"),
-            ("n_dups", "bigint"), ("n_docs", "bigint"), ("share", "double"),
-            ("dsir_units", "bigint"), ("dsir_score", "double"),
-        ],
-        [
-            ("pii", "pii_scan"),
-            ("decontam", "decontaminate"),
-            ("lineclean", "line_clean"),
-            ("classifier", "hashed_classifier"),
-            ("bloomdecontam", "bloom_decontam"),
-            ("urlnorm", "url_normalize"),
-            ("urldedup", "url_dedup"),
-            ("hostblock", "host_blocklist"),
-            ("hostshares", "host_shares"),
-            ("dsir", "dsir_importance"),
-        ],
-    ),
-    "events_stream_windows": (
-        [
-            ("window_start", "string"), ("event_type", "string"),
-            ("n_name", "string"), ("n_events", "bigint"), ("sum_value", "double"),
-            ("click_id", "bigint"), ("buy_id", "bigint"),
-        ],
-        [
-            ("windows", "events_stream_windows"),
-            ("enriched", "events_stream_enriched"),
-            ("ssjoin", "events_stream_ssjoin"),
-        ],
-    ),
-    "sampling_suite": (
-        [
-            ("doc_id", "bigint"), ("split", "string"), ("source", "string"),
-            ("n_tokens", "bigint"), ("pack_id", "bigint"),
-            ("cluster_id", "bigint"), ("rk", "bigint"),
-            ("shard", "bigint"), ("pos", "bigint"),
-            ("lang", "string"), ("bucket", "bigint"),
-        ],
-        [
-            ("split", "dataset_split"),
-            ("clustersplit", "cluster_split"),
-            ("stratified", "stratified_sample"),
-            ("pack", "pack_tokens"),
-            ("mixture", "mixture_sample"),
-            ("domaincap", "domain_cap"),
-            ("shards", "shuffle_shards"),
-            ("survivors", "cluster_survivors"),
-            ("quantile", "quantile_buckets"),
-        ],
-    ),
+    "dedup_ngram_jaccard": [
+        ("jaccard", "dedup_ngram_jaccard"),
+        ("containment", "ngram_containment"),
+        ("exactsubstr", "exact_substring"),
+    ],
+    "curation_guard": [
+        ("pii", "pii_scan"),
+        ("decontam", "decontaminate"),
+        ("lineclean", "line_clean"),
+        ("classifier", "hashed_classifier"),
+        ("bloomdecontam", "bloom_decontam"),
+        ("urlnorm", "url_normalize"),
+        ("urldedup", "url_dedup"),
+        ("hostblock", "host_blocklist"),
+        ("hostshares", "host_shares"),
+        ("dsir", "dsir_importance"),
+    ],
+    "events_stream_windows": [
+        ("windows", "events_stream_windows"),
+        ("enriched", "events_stream_enriched"),
+        ("ssjoin", "events_stream_ssjoin"),
+    ],
+    "sampling_suite": [
+        ("split", "dataset_split"),
+        ("clustersplit", "cluster_split"),
+        ("stratified", "stratified_sample"),
+        ("pack", "pack_tokens"),
+        ("mixture", "mixture_sample"),
+        ("domaincap", "domain_cap"),
+        ("shards", "shuffle_shards"),
+        ("survivors", "cluster_survivors"),
+        ("quantile", "quantile_buckets"),
+    ],
 }
 
 
-def _pad_one(df: DataFrame, tag: str, schema) -> DataFrame:
-    """Tag + NULL-pad one part's output to the merged schema.
+def _default_builder(parts):
+    """Builder that runs each ``(tag, part_fn)`` unchanged: concurrently,
+    unless a part declares a session side effect."""
+    sequential = any(getattr(fn, "session_side_effect", False) for _, fn in parts)
 
-    Built as ONE selectExpr call: the former per-column Column builders
-    (`F.lit/F.col/.cast/.alias` — 3-13 py4j round-trips each) cost
-    ~25 columns x ~10 parts of serialized driver wall per merge
-    (measured 1.24 s of curation_guard's construction; guide §1.2
-    applied to the driver boundary). The parsed expressions produce the
-    same literals/attributes, so rows and schema are unchanged."""
-    have = set(df.columns)
-    cols = [f"'{tag}' AS part"] + [
-        f"`{c}`" if c in have else f"CAST(NULL AS {t}) AS `{c}`"
-        for c, t in schema
-    ]
-    return df.selectExpr(*cols)
+    def build(spark, sf_dir):
+        tasks = [partial(fn, spark, sf_dir) for _, fn in parts]
+        dfs = [t() for t in tasks] if sequential else build_concurrently(spark, tasks)
+        return [(tag, df) for (tag, _), df in zip(parts, dfs)]
+
+    return build
 
 
-# Merges whose parts may CONSTRUCT concurrently (guide §2.6 — overlap
-# independent jobs): construction-phase driver actions (quantizer memo
-# loads, model-sidecar collects, plan-choosing counts) serialized one
-# part after another, leaving the cluster idle between small jobs.
-# These parts only read the parquet catalog and their own scratch
-# paths: no temp-view registration (sql_transforming stays sequential),
-# no session-conf scoping and no drained-stream gates (the streaming
-# merges stay sequential), no shared mutable operator state. Part
-# results are deterministic, so construction order cannot change rows.
-PARALLEL_BUILD = {
-    "ann_lsh_neardup",
-    "ann_ivf_index",
-    "text_analysis",
-    "token_count",
-    "curation_guard",
-    "multimodal_pipeline",
-    "dedup_ngram_jaccard",
-    "sources_roundtrip",
-    "project_map_filter",
-    "joining_sources",
-    "steps_suite",
-    "dim_getby",
-    "snowflake_lookup_ensure",
-    "fact_suite",
-    "rollup_cube_agg",
-    "advanced_aggs",
-    "helpers_suite",
-    "scd_lookupasof",
-}
-
-_BUILD_POOL_WORKERS = 4  # 2-4 in flight fills the tail (guide §2.6)
-
-
-def _build_parts(builders, spark, sf_dir, parallel):
-    """Construct every part DataFrame, optionally overlapping the
-    construction-phase Spark jobs on a small thread pool. Returns the
-    DataFrames in part order regardless of completion order."""
-    if not parallel or len(builders) < 2:
-        return [fn(spark, sf_dir) for fn in builders]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(_BUILD_POOL_WORKERS, len(builders))) as pool:
-        return list(pool.map(lambda fn: fn(spark, sf_dir), builders))
-
-
-def _union_query(parts, schema, parallel=False):
-    """Merged Spark query: run each part unchanged, tag + NULL-pad, union."""
+def _merged_query(builder, tags):
+    """Merged Spark query: check the builder's tags, tag each frame,
+    union by name."""
 
     def q(spark, sf_dir):
-        dfs = _build_parts([fn for _, fn in parts], spark, sf_dir, parallel)
-        outs = [_pad_one(df, tag, schema) for (tag, _), df in zip(parts, dfs)]
-        return reduce(DataFrame.unionByName, outs)
+        got, frames = [], []
+        for tag, df in builder(spark, sf_dir):
+            if isinstance(tag, tuple):  # fused frame: rows carry `part`
+                got.extend(tag)
+                frames.append(df)
+            else:
+                got.append(tag)
+                frames.append(df.selectExpr(f"'{tag}' AS part", "*"))
+        if got != tags:
+            raise ValueError(f"merged builder yielded tags {got}, expected {tags}")
+        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
 
     return q
 
 
-def _shared_union_query(builder, schema, expected_tags):
-    """Merged Spark query from a SHARED builder: ``builder(spark, sf_dir)``
-    returns ``[(tag, DataFrame)]`` for every part, computing heavy
-    intermediates common to several parts ONCE (pinned via lazy
-    localCheckpoint) instead of once per part. The builder must yield
-    exactly the merge's tags, each with rows identical to the standalone
-    part query — the DuckDB oracle is unchanged, so the correctness gate
-    verifies that equivalence every round (guide §1.2: the generic
-    per-part construction replayed shared subtrees; measured builds in
-    OPTIMIZATION_r09.md)."""
-
-    def q(spark, sf_dir):
-        built = builder(spark, sf_dir)
-        tags = [t for t, _ in built]
-        if tags != list(expected_tags):
-            raise ValueError(
-                f"shared builder yielded tags {tags}, expected {list(expected_tags)}"
-            )
-        outs = [_pad_one(df, tag, schema) for tag, df in built]
-        return reduce(DataFrame.unionByName, outs)
-
-    return q
+def _merged_oracle(parts):
+    """Merged DuckDB oracle: the part oracles, tagged, UNION ALL BY NAME."""
+    return "\nUNION ALL BY NAME\n".join(
+        f"SELECT '{tag}' AS part, * FROM (\n{sql}\n)" for tag, sql in parts
+    )
 
 
-def _union_oracle(parts, schema):
-    """Merged DuckDB oracle: UNION ALL of part oracles with NULL padding."""
-    selects = []
-    for tag, sql, cols in parts:
-        have = set(cols)
-        sel = ", ".join(
-            c if c in have else f"CAST(NULL AS {_DUCK[t]}) AS {c}"
-            for c, t in schema
-        )
-        selects.append(f"SELECT '{tag}' AS part, {sel} FROM (\n{sql}\n)")
-    return "\nUNION ALL\n".join(selects)
-
-
-def build_merged(all_queries, all_oracles, shared_builders=None, full_builders=None):
+def build_merged(all_queries, all_oracles, builders):
     """Instantiate every merge in :data:`MERGES` against the full per-part
-    query/oracle dicts. Returns ``(merged_queries, merged_oracles)``.
-
-    ``shared_builders`` maps a merge name to a shared-intermediate
-    builder (see :func:`_shared_union_query`); merges without one keep
-    the generic call-each-part-unchanged construction.
-    ``full_builders`` maps a merge name to a FUSED builder
-    ``fn(spark, sf_dir, schema) -> DataFrame`` that returns the
-    complete merged frame itself (part column included) — for merges
-    whose parts collapse into one chain, where even a shared builder
-    would replay the common subtree across union branches. Oracles are
-    always the generic UNION ALL — every builder kind is checked
-    against the SAME oracle as the generic construction."""
-    shared_builders = shared_builders or {}
-    full_builders = full_builders or {}
+    query/oracle dicts. ``builders`` maps a merge name to its custom
+    builder; every other merge gets the default builder. Returns
+    ``(merged_queries, merged_oracles)``."""
     merged_q, merged_o = {}, {}
-    for name, (schema, parts) in MERGES.items():
-        if name in full_builders:
-            def _full(spark, sf_dir, _fn=full_builders[name], _schema=schema):
-                return _fn(spark, sf_dir, _schema)
-
-            merged_q[name] = _full
-        elif name in shared_builders:
-            merged_q[name] = _shared_union_query(
-                shared_builders[name], schema, [tag for tag, _ in parts]
-            )
-        else:
-            merged_q[name] = _union_query(
-                [(tag, all_queries[p]) for tag, p in parts], schema,
-                parallel=name in PARALLEL_BUILD,
-            )
-        merged_o[name] = _union_oracle(
-            [(tag, all_oracles[p], PART_COLS[p]) for tag, p in parts], schema
+    for name, parts in MERGES.items():
+        builder = builders.get(name) or _default_builder(
+            [(tag, all_queries[p]) for tag, p in parts]
         )
+        merged_q[name] = _merged_query(builder, [tag for tag, _ in parts])
+        merged_o[name] = _merged_oracle([(tag, all_oracles[p]) for tag, p in parts])
     return merged_q, merged_o

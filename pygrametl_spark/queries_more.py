@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from functools import partial
 
 from pyspark.sql import functions as F
 
@@ -27,7 +28,9 @@ from pygrametl_spark.operators.facttable import FactTable
 from pygrametl_spark.operators.scd import SlowlyChangingDimension, scd2_from_history
 from pygrametl_spark.operators.snowflake import SnowflakedDimension
 from pygrametl_spark.plans.keys import assign_dense_keys
-from pygrametl_spark.queries_shared import TS_FMT_DUCK, _SCD2_DUCK_DIM, _fmt_ts
+from pygrametl_spark.queries_shared import (
+    TS_FMT_DUCK, _SCD2_DUCK_DIM, _fmt_ts, build_concurrently, session_side_effect,
+)
 from pygrametl_spark.sources.sources import (
     DynamicForEachSource,
     PEP249Source,
@@ -561,21 +564,16 @@ SELECT query_id, rank, neighbor_id, cosine FROM ranked WHERE rank <= 5
 """
 
 
-def q_ann_kmeans(spark, sf_dir, *, centroids=None):
+def q_ann_kmeans(spark, sf_dir):
     """Spherical k-means centroid refinement (2 fixed Lloyd's rounds,
     similarity.kmeans_refine) followed by a final zero-shuffle
     assignment pass — the production IVF training step. Training is
     paid per invocation (iters + 1 small jobs; the r7-r9 cross-run memo
-    is retired — see the quantizer-training note at the top).
-    ``centroids`` injects an already-trained (n=8, iters=2) quantizer —
-    the shared ann_lsh_neardup builder trains it once for this part and
-    semdedup (same trajectory, same rows)."""
+    is retired — see the quantizer-training note at the top)."""
     from pygrametl_spark.functions import similarity as sim
 
     emb = load_catalog(spark, sf_dir).embeddings
-    cent = centroids if centroids is not None else _trained_kmeans_centroids(
-        spark, sf_dir, n_clusters=8, iters=2
-    )
+    cent = _trained_kmeans_centroids(spark, sf_dir, n_clusters=8, iters=2)
     return sim.ivf_assign(emb, n_clusters=8, centroids=cent).select("vec_id", "cluster")
 
 
@@ -636,7 +634,7 @@ SELECT query_id, rank, neighbor_id, qcosine FROM r WHERE rank <= 5
 """
 
 
-def q_ann_pq_codes(spark, sf_dir, *, books=None):
+def q_ann_pq_codes(spark, sf_dir):
     """Product-quantization training + encoding (similarity.pq_train /
     pq_codes, m=4 subspaces x 8 centroids, 2 Lloyd's rounds): codes
     exploded to (vec_id, sub, code) so the whole training trajectory is
@@ -645,8 +643,7 @@ def q_ann_pq_codes(spark, sf_dir, *, books=None):
     from pygrametl_spark.functions import similarity as sim
 
     emb = load_catalog(spark, sf_dir).embeddings
-    if books is None:
-        books = _trained_pq_books(spark, sf_dir, m=4, k=8, iters=2)
+    books = _trained_pq_books(spark, sf_dir, m=4, k=8, iters=2)
     return (
         sim.pq_codes(emb, books)
         .select("vec_id", F.posexplode("codes").alias("sub", "code"))
@@ -654,7 +651,7 @@ def q_ann_pq_codes(spark, sf_dir, *, books=None):
     )
 
 
-def q_ann_pq_rerank(spark, sf_dir, *, books=None):
+def q_ann_pq_rerank(spark, sf_dir):
     """ADC shortlist → exact re-rank top-k (similarity.pq_topk_rerank,
     the FAISS ``refine`` pattern): an m=4×8 PQ trajectory (iters=1 —
     the 2-round trajectory is already gated by ``ann_pq_codes``; one
@@ -666,8 +663,7 @@ def q_ann_pq_rerank(spark, sf_dir, *, books=None):
     from pygrametl_spark.functions import similarity as sim
 
     emb = load_catalog(spark, sf_dir).embeddings
-    if books is None:
-        books = _trained_pq_books(spark, sf_dir, m=4, k=8, iters=1)
+    books = _trained_pq_books(spark, sf_dir, m=4, k=8, iters=1)
     codes = sim.pq_codes(emb, books)
     queries = emb.filter("vec_id < 5")
     return sim.pq_topk_rerank(codes, queries, books, emb, shortlist=20, k=5)
@@ -891,7 +887,7 @@ def _kmeans_oracle(iters: int = 2, dim: int = 64) -> str:
     )
 
 
-def q_ann_semdedup(spark, sf_dir, *, centroids=None):
+def q_ann_semdedup(spark, sf_dir):
     """SemDeDup-style semantic dedup (similarity.semantic_dedup,
     arXiv:2303.09540): spherical-kmeans clusters, within-cluster
     smaller-id near-neighbor pruning — O(n²) collapses to
@@ -899,9 +895,7 @@ def q_ann_semdedup(spark, sf_dir, *, centroids=None):
     from pygrametl_spark.functions import similarity as sim
 
     emb = load_catalog(spark, sf_dir).embeddings
-    cent = centroids if centroids is not None else _trained_kmeans_centroids(
-        spark, sf_dir, n_clusters=8, iters=2
-    )
+    cent = _trained_kmeans_centroids(spark, sf_dir, n_clusters=8, iters=2)
     return sim.semantic_dedup(
         emb, n_clusters=8, iters=2, threshold=0.45, centroids=cent
     )
@@ -937,6 +931,7 @@ FROM asg a LEFT JOIN dups d ON a.vec_id = d.vec_id
 # the batch twin is plain gaps-and-islands SQL.
 # ---------------------------------------------------------------------------
 
+@session_side_effect
 def q_events_sessionize(spark, sf_dir):
     from pygrametl_spark.queries_data import _memo_stream_gate
     from pygrametl_spark.streaming.events import stream_sessionize
@@ -1194,67 +1189,21 @@ def shared_scd2_type1_overrides(spark, sf_dir):
     the pin fixes). Build the base ONCE, pin it, and derive both modes
     from the pinned frames; rows are identical to the standalone part
     queries, which the unchanged UNION ALL oracle verifies."""
-    from concurrent.futures import ThreadPoolExecutor
-
     dim_df, latest = _scd2_t1_base(spark, sf_dir)
     prebuilt = (
         dim_df.localCheckpoint(eager=False),
         latest.localCheckpoint(eager=False),
     )
     # both modes' scdensure sidecar jobs (max-key, dense-key count) read
-    # the same pinned base — overlap them (guide §2.6)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        allv, latestonly = pool.map(
-            lambda ua: _scd2_with_t1(spark, sf_dir, updateall=ua, prebuilt=prebuilt),
-            [True, False],
-        )
+    # the same pinned base — overlap them
+    allv, latestonly = build_concurrently(spark, [
+        partial(_scd2_with_t1, spark, sf_dir, updateall=ua, prebuilt=prebuilt)
+        for ua in (True, False)
+    ])
     return [("allversions", allv), ("latestonly", latestonly)]
 
 
-def shared_ann_lsh_neardup(spark, sf_dir):
-    """Shared builder for the 8-part ann_lsh_neardup tag-union (r10).
-
-    With the r7-r9 cross-run quantizer memos retired, the generic
-    per-part construction would train the (n=8, iters=2) kmeans
-    trajectory TWICE per invocation (kmeans + semdedup parts) and pay
-    the pq codebooks' shared first Lloyd's round twice (pq trains
-    iters=2, rerank iters=1 — round 1 is common by construction). Train
-    each artifact once HERE — strictly per invocation, nothing
-    persisted — resuming pq round 2 from round 1 via
-    ``pq_train(start_books=...)`` (exact-equality pinned by
-    test_pq_train_start_books_resumes), then build the independent
-    parts on the same 4-worker pool the generic parallel construction
-    used (guide §2.6). Every part's rows are identical to its
-    standalone query; the unchanged UNION ALL oracle re-proves that
-    equivalence each round."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pygrametl_spark.functions import similarity as sim
-    from pygrametl_spark.queries_data import q_ann_lsh_buckets, q_ann_lsh_mp_topk
-    from pygrametl_spark.queries_extra import q_ann_lsh_neardup
-
-    emb = load_catalog(spark, sf_dir).embeddings
-    # sequential driver-job trainings (each is iters+1 tiny jobs); the
-    # results are LocalRelation / python-literal sidecars
-    cent = sim.kmeans_refine(emb, n_clusters=8, iters=2)
-    books1 = sim.pq_train(emb, m=4, k=8, iters=1)
-    books2 = sim.pq_train(emb, m=4, k=8, iters=1, start_books=books1)
-
-    builders = [
-        ("buckets", lambda: q_ann_lsh_buckets(spark, sf_dir)),
-        ("neardup", lambda: q_ann_lsh_neardup(spark, sf_dir)),
-        ("kmeans", lambda: q_ann_kmeans(spark, sf_dir, centroids=cent)),
-        ("sq8", lambda: q_ann_sq8_topk(spark, sf_dir)),
-        ("pq", lambda: q_ann_pq_codes(spark, sf_dir, books=books2)),
-        ("rerank", lambda: q_ann_pq_rerank(spark, sf_dir, books=books1)),
-        ("multiprobe", lambda: q_ann_lsh_mp_topk(spark, sf_dir)),
-        ("semdedup", lambda: q_ann_semdedup(spark, sf_dir, centroids=cent)),
-    ]
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        futs = [(tag, pool.submit(fn)) for tag, fn in builders]
-        return [(tag, f.result()) for tag, f in futs]
-
-
+@session_side_effect
 def q_scd2_streaming_maintain(spark, sf_dir):
     """Streaming SCD2: scdensure per micro-batch via foreachBatch over
     time-ordered slices; final dimension == one-shot batch replay of the

@@ -1,5 +1,7 @@
-"""Leaf-module home for the oracle-formatting helpers shared by the
-query-registry modules (queries / queries_extra / queries_more).
+"""Leaf-module home for the helpers shared by the query-registry
+modules (queries / queries_data / queries_extra / queries_more /
+queries_merged): oracle formatting, the session-side-effect marker and
+the one pool that constructs tag-union parts concurrently.
 
 These used to live in ``queries.py``, but that module also imports the
 registries from ``queries_extra`` / ``queries_more`` to assemble
@@ -13,6 +15,9 @@ registry family makes every registry module importable in isolation.
 """
 
 from __future__ import annotations
+
+import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import functions as F
 
@@ -50,3 +55,32 @@ WITH changes AS (
   FROM v
 )
 """
+
+
+def session_side_effect(fn):
+    """Mark a part query that changes session state while it is
+    constructed, so a tag-union containing it builds its parts one after
+    another. Two kinds exist: temp-view registration (view names are
+    session-global, so a concurrent sibling could resolve a view while
+    it is being replaced) and the drained-stream gates
+    (``queries_data._memo_stream_gate``), whose streams scope session
+    confs and register memory sinks for their whole drain."""
+    fn.session_side_effect = True
+    return fn
+
+
+def build_concurrently(spark, tasks):
+    """Run zero-argument part constructions and return their results in
+    task order. Independent parts' construction-phase driver actions
+    (quantizer trainings, sidecar collects, plan-choosing counts)
+    overlap on a thread pool instead of leaving the cluster idle between
+    small jobs. The width is one worker per task, capped by Spark's
+    default parallelism and by the CPUs this process may run on, so
+    ``local[1]`` or a single task runs in order on the calling thread."""
+    width = min(
+        len(tasks), spark.sparkContext.defaultParallelism, len(os.sched_getaffinity(0))
+    )
+    if width < 2:
+        return [task() for task in tasks]
+    with ThreadPoolExecutor(width) as pool:
+        return list(pool.map(lambda task: task(), tasks))

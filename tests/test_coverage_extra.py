@@ -223,7 +223,8 @@ def test_registry_modules_import_standalone():
     ):
         r = subprocess.run(
             [sys.executable, "-c", f"import {mod}"],
-            capture_output=True, text=True, cwd="/root/repo",
+            capture_output=True, text=True,
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         )
         assert r.returncode == 0, f"{mod} failed standalone: {r.stderr[-500:]}"
 

@@ -424,3 +424,18 @@ def test_durable_state_protocol_interop_and_dimension_api(spark, tmp_path):
         spark, str(tmp_path / "ptr_dim")
     )
     assert d2.df.count() == 2
+
+
+
+def test_getbykey_list_uses_local_relation(spark):
+    """Dimension.getbykey with a Python key list keeps left-join
+    semantics and plans the key probe as a LocalTableScan."""
+    from pygrametl_spark.operators.dimension import Dimension
+
+    dim_df = spark.createDataFrame(
+        [(1, "a"), (2, "b")], "id bigint, name string"
+    )
+    dim = Dimension("d", "id", ["name"], df=dim_df)
+    out = dim.getbykey([2, 99])
+    rows = {r.id: r.name for r in out.collect()}
+    assert rows == {2: "b", 99: None}

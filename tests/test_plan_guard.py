@@ -10,6 +10,7 @@ fails HERE, at sf0.001, instead of in a cluster bill.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from pygrametl_spark.plans.explain import formatted_plan, plan_stats
 
@@ -180,3 +181,95 @@ def test_merge_joining_source_broadcasts_small_side(spark):
         assert "SortMergeJoin" in p2 or "ShuffledHashJoin" in p2
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+
+
+# ---------------------------------------------------------------------------
+# Plan-shaping helpers: the pin heuristic and VALUES local relations must
+# change only the plan, never the rows.
+# ---------------------------------------------------------------------------
+
+
+def test_worth_pinning_heuristic(spark):
+    from pygrametl_spark.plans.keys import _worth_pinning
+
+    plain = spark.read.parquet(f"{SF}/nation.parquet").select("n_name")
+    assert not _worth_pinning(plain)
+    assert _worth_pinning(plain.distinct())
+    assert _worth_pinning(
+        plain.join(spark.range(3).select(F.lit("x").alias("n_name")), "n_name")
+    )
+
+
+def test_dense_keys_identical_with_and_without_pin(spark):
+    """assign_dense_keys numbering is independent of the pin decision."""
+    from pygrametl_spark.plans.keys import assign_dense_keys
+
+    base = (
+        spark.read.parquet(f"{SF}/customer.parquet")
+        .select("c_name")
+        .distinct()  # -> _worth_pinning True on the default path
+    )
+    pinned = assign_dense_keys(base, ["c_name"], "k", 100)
+    unpinned = assign_dense_keys(base, ["c_name"], "k", 100, approx_count=150)
+    assert sorted(pinned.collect()) == sorted(unpinned.collect())
+
+
+def test_local_relation_value_identity(spark):
+    """local_relation must hand back EXACTLY the rows createDataFrame
+    would, for every supported literal type — including bit-exact
+    doubles (repr round-trip), NaN/Infinity, NULLs, arrays, quotes and
+    backslashes in strings."""
+    import math
+
+    from pygrametl_spark.plans.local import local_relation
+
+    rows = [
+        (1, 0.1 + 0.2, "plain", [1.5, -0.0, 2.0 ** -45], True),
+        (-(2 ** 62), float("nan"), "it's a \\ 'quote'", [], False),
+        (None, float("inf"), None, None, None),
+        (7, float("-inf"), "newline\nand\ttab", [math.pi, 1e-308], True),
+    ]
+    ddl = "a bigint, b double, c string, d array<double>, e boolean"
+    lr = local_relation(spark, rows, ddl)
+    cd = spark.createDataFrame(rows, schema=ddl)
+    assert lr.schema == cd.schema
+
+    def key(r):
+        def f(v):
+            if isinstance(v, float):
+                return repr(v)  # distinguishes nan/inf, exact bits
+            if isinstance(v, list):
+                return tuple(repr(x) for x in v)
+            return v
+        return tuple(repr(f(v)) for v in r)
+
+    assert sorted(map(key, lr.collect())) == sorted(map(key, cd.collect()))
+
+
+def test_local_relation_is_jvm_only(spark):
+    """The point of local_relation: the plan is a LocalTableScan with no
+    Python-RDD scan, so downstream actions never spawn Python workers
+    for the sidecar."""
+    from pygrametl_spark.plans.local import local_relation
+
+    lr = local_relation(spark, [(1, "x"), (2, "y")], "k bigint, v string")
+    plan = lr._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan and "EvalPython" not in plan
+
+
+def test_local_relation_fallbacks(spark):
+    """Empty input, over-cap input, and unsupported literal types all
+    fall back to createDataFrame with identical values."""
+    from pygrametl_spark.plans.local import local_relation
+
+    assert local_relation(spark, [], "a bigint").count() == 0
+    big = [(i,) for i in range(50)]
+    capped = local_relation(spark, big, "a bigint", max_values_rows=10)
+    assert "ExistingRDD" in capped._jdf.queryExecution().executedPlan().toString()
+    assert sorted(r.a for r in capped.collect()) == list(range(50))
+    import datetime
+
+    dates = [(datetime.date(2026, 1, 1),), (None,)]
+    fb = local_relation(spark, dates, "d date")
+    assert sorted(str(r.d) for r in fb.collect()) == ["2026-01-01", "None"]

@@ -1,6 +1,7 @@
 """Source constructors + scalar/date helpers (ref datasources.py, __init__.py)."""
 
 import datetime
+import os
 
 from pyspark.sql import functions as F
 
@@ -215,3 +216,25 @@ def test_datereader_and_rowfactory(spark):
 
     rows = list(helpers.rowfactory(df, names=["d"]))
     assert rows == [{"d": "2024-02-29"}]
+
+
+
+def test_catalog_memo_stable_and_mtime_invalidated(spark, tmp_path):
+    """The catalog-relation memo hands back the same plan handle for an
+    unchanged table and refuses to serve a stale one after a rewrite."""
+    from pygrametl_spark.catalog import _catalog_relation
+
+    p = str(tmp_path / "t.parquet")
+    spark.range(5).write.parquet(p)
+    a = _catalog_relation(spark, p)
+    b = _catalog_relation(spark, p)
+    assert a is b  # same plan handle while the table is unchanged
+    assert a.count() == 5
+    # rewrite with a different mtime: the memo must not serve the old
+    # file index (stale-read guard)
+    os.utime(p, (os.path.getmtime(p) + 10, os.path.getmtime(p) + 10))
+    spark.range(7).write.mode("overwrite").parquet(p)
+    os.utime(p, (os.path.getmtime(p) + 20, os.path.getmtime(p) + 20))
+    c = _catalog_relation(spark, p)
+    assert c is not a
+    assert c.count() == 7
